@@ -117,6 +117,9 @@ def _t_par(spark: SparkSession, sf_dir: str, name: str, key: str | None = None) 
             )
     except OSError:
         return df
+    if total <= 0:
+        # empty or unlistable path: an unknown size takes the no-shuffle branch
+        return df
     par = spark.sparkContext.defaultParallelism
     split = _size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     if total >= par * split:

@@ -42,7 +42,7 @@ from bench import HEADLINE, run_noop  # noqa: E402
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--queries", default=None, help="comma list; default = bench HEADLINE")
     ap.add_argument("--all", action="store_true", help="time every queries() entry")

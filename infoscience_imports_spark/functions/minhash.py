@@ -35,16 +35,3 @@ def minhash_signature(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.
     # (P, m) matrix; uint64 wrap-around multiply-add, keep top 32 bits
     hv = (a[:, None] * shingles[None, :] + b[:, None]) >> np.uint64(32)
     return hv.min(axis=1).astype(np.int64)
-
-
-def minhash_batch(shingle_sets: list[np.ndarray], cfg: DedupConfig = DEFAULT_CONFIG) -> list[np.ndarray]:
-    """Signatures for a batch of shingle sets (used inside the Arrow UDF).
-
-    Deliberately a per-doc loop: a whole-batch concatenate +
-    ``np.minimum.reduceat`` variant was benchmarked in round 6 and ran
-    8-24x SLOWER (reduceat's segment loop is a generalized-ufunc inner
-    loop, far off the per-doc matmul-min's memory bandwidth) — the per-doc
-    kernel is the fast form at both short and long doc lengths.
-    """
-    a, b = perm_params(cfg)
-    return [minhash_signature(s, a, b) for s in shingle_sets]

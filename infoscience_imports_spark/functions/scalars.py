@@ -74,14 +74,3 @@ def normalize_isbn(col: Column) -> Column:
     s = F.upper(F.regexp_replace(F.trim(col.cast("string")), r"[\s-]", ""))
     ok = s.rlike(r"^([0-9]{9}[0-9X]|[0-9]{13})$")
     return F.when(ok, s).otherwise(F.lit(None).cast("string"))
-
-
-def oa_category(is_oa: Column, oa_status: Column, has_repo_copy: Column) -> Column:
-    """5-way CASE classification (F22, ``pipeline_db.py:786-795`` shape)."""
-    return (
-        F.when(~F.coalesce(is_oa, F.lit(False)), F.lit("closed"))
-        .when(oa_status == "gold", F.lit("gold"))
-        .when(oa_status == "hybrid", F.lit("hybrid"))
-        .when(F.coalesce(has_repo_copy, F.lit(False)), F.lit("green"))
-        .otherwise(F.lit("bronze"))
-    )

@@ -264,8 +264,9 @@ def simhash_candidate_pairs(
 
     Exact within ``cfg.simhash_hamming_max`` by the block-combination
     pigeonhole (:func:`simhash_band_pairs`). Standalone form
-    (queries/tests): gates its own pair list; the pipeline gates one unioned
-    candidate frame instead and calls :func:`hamming_edges` directly.
+    (queries/tests): gates its own pair list; ``operators/edges.py``
+    ``rule_edges`` gates one unioned candidate frame instead and calls
+    :func:`hamming_edges` directly.
     """
     from .verify import gate_broadcast_info
 
@@ -273,14 +274,3 @@ def simhash_candidate_pairs(
         simhash_band_pairs(signatures, cfg), cfg.broadcast_pair_limit
     )
     return hamming_edges(pairs, signatures, cfg, gated=gated)
-
-
-def simhash_edges(signatures, cfg: DedupConfig = DEFAULT_CONFIG):
-    """SimHash pairs as edge rows (score = 1 - hamming/64, rule='simhash')."""
-    pairs = simhash_candidate_pairs(signatures, cfg)
-    return pairs.select(
-        "id1",
-        "id2",
-        (F.lit(1.0) - F.col("hamming") / F.lit(64.0)).alias("jaccard"),
-        F.lit("simhash").alias("rule"),
-    )

@@ -31,9 +31,9 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..operators import components as comp
-from ..operators import containment as cont
 from ..operators import lsh
 from ..operators import signatures as sigs
+from ..operators.edges import rule_edges
 from ..operators import verify
 from ..functions.text import extract_text_col, normalize_text_col
 from ..sources.catalog import CheckpointStore, chain_fingerprint
@@ -219,82 +219,16 @@ class DedupPipeline:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         self._stage_persists.append(rep_texts)
-        exact = verify.exact_edges(signatures)
-        # NB: one unified candidate_pairs over a banded union of both LSH
-        # families was tried (round 3) and REVERTED: the per-family subtrees
-        # below evaluate concurrently inside the single gated count job
-        # (independent stages of one job fill idle cores), and the union
-        # serialized that work through one longer shuffle chain — measured
-        # edges 8.2 s -> 11.0 s at 20k pages. Shuffle COUNT is not the
-        # bottleneck here; concurrent stage occupancy is.
-        #
-        # The three family CONSTRUCTORS each run bounded eager driver jobs
-        # (hot-slice probe collects; the containment Bloom treeReduce)
-        # before the gated count job ever starts. Serially those probes
-        # measured 0.96 + 0.88 + 1.35 s at 20k pages on 32 cores — none of
-        # them fills the machine, so they back-fill each other from a small
-        # thread pool (guide §2.6 "overlap independent jobs").
-        # inheritable_thread_target propagates the caller's job group to
-        # the pool threads, keeping bench fingerprint attribution intact.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
-        def _build_minhash():
-            return lsh.candidate_pairs(buckets, self.cfg).select(
-                "id1", "id2", F.lit("minhash").alias("rule")
-            )
-
-        def _build_contain():
-            return cont.containment_candidates(
-                reps,
-                rep_texts,
-                self.cfg,
-                n_docs_hint=self.store.rows("signatures", self.fingerprint("signatures")),
-            ).select(
-                F.col("small_id").alias("id1"),
-                F.col("big_id").alias("id2"),
-                F.lit("contain").alias("rule"),
-            )
-
-        def _build_simhash():
-            return lsh.simhash_band_pairs(reps, self.cfg).select(
-                "id1", "id2", F.lit("simhash").alias("rule")
-            )
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_mh = pool.submit(inheritable_thread_target(_build_minhash))
-            f_ct = pool.submit(inheritable_thread_target(_build_contain))
-            f_sh = pool.submit(inheritable_thread_target(_build_simhash))
-            minhash_pairs = f_mh.result()
-            contain_cand = f_ct.result()
-            sim_pairs = f_sh.result()
-        # ONE gated candidate frame for all three fuzzy rules: a single
-        # persist+count job evaluates the minhash/containment/simhash
-        # candidate subtrees concurrently (independent stages of one job fill
-        # idle cores), where per-rule gates would chain three serial jobs.
-        cands = minhash_pairs.unionByName(contain_cand).unionByName(sim_pairs).persist(
-            StorageLevel.MEMORY_AND_DISK
+        edges, n_cands, small = rule_edges(
+            reps,
+            rep_texts,
+            buckets,
+            self.cfg,
+            n_docs_hint=self.store.rows("signatures", self.fingerprint("signatures")),
         )
-        n_cands = cands.count()
-        small = n_cands <= self.cfg.broadcast_pair_limit
         self.metrics["candidate_pairs"] = n_cands
         self.metrics["verify_broadcast_gated"] = small
-        self._stage_persists.append(cands)
-        fz_pairs = cands.filter(F.col("rule") != "simhash")
-        sh_pairs = cands.filter(F.col("rule") == "simhash").select("id1", "id2")
-        if small:
-            fz_pairs = fz_pairs.hint("broadcast")
-        # both fuzzy rules verify in ONE kernel pass over ONE pair of text
-        # joins (operators/verify.py verify_tagged_pairs)
-        fuzzy = verify.verify_tagged_pairs(fz_pairs, rep_texts, self.cfg, pregated=True)
-        simhash = lsh.hamming_edges(sh_pairs, reps, self.cfg, gated=small).select(
-            "id1",
-            "id2",
-            (F.lit(1.0) - F.col("hamming") / F.lit(64.0)).alias("jaccard"),
-            F.lit("simhash").alias("rule"),
-        )
-        return verify.combine_edges(exact, fuzzy, simhash)
+        return verify.combine_edges(verify.exact_edges(signatures), edges)
 
     def _components(self, edges: DataFrame, extract_df: DataFrame) -> DataFrame:
         assign = comp.connected_components(
@@ -325,8 +259,6 @@ class DedupPipeline:
         """
         import os
 
-        if os.environ.get("SPARK_GRAFT_NO_STAGE_TUNE"):
-            return
         src = self._STAGE_SCAN_INPUT.get(stage)
         if src is None:
             return
@@ -340,6 +272,10 @@ class DedupPipeline:
             for r, _d, fs in os.walk(snap)
             for f in fs
         )
+        if total <= 0:
+            # empty or unlistable snapshot: an unknown size leaves the conf
+            # untouched rather than forcing the 1 MB floor split
+            return
         par = self.spark.sparkContext.defaultParallelism
         split = min(128 << 20, max(1 << 20, total // (4 * par)))
         self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))

@@ -315,9 +315,12 @@ class IncrementalNearDedup(IncrementalDedup):
         # the bucket count is baked into every stored dpart value; reopening
         # with a different one would silently corrupt pruned reads and the
         # partition-scoped rewrite (round-5 ADVICE) — validate against the
-        # stamp the first compaction wrote
+        # stamp written when the state dir was first opened
         stamped = self._read_meta().get("n_state_buckets")
-        if stamped is not None and int(stamped) != int(n_state_buckets):
+        if stamped is None:
+            os.makedirs(state_dir, exist_ok=True)
+            self._update_meta(n_state_buckets=int(n_state_buckets))
+        elif int(stamped) != int(n_state_buckets):
             raise ValueError(
                 f"state dir {state_dir} was written with n_state_buckets="
                 f"{stamped} but opened with {n_state_buckets}; dpart values "
@@ -631,9 +634,6 @@ class IncrementalNearDedup(IncrementalDedup):
         import json
 
         m = self._read_meta()
-        # stamp the layout parameter alongside the watermarks so a reopen
-        # with a different bucket count is rejected at __init__ (see there)
-        m.setdefault("n_state_buckets", int(self.n_state_buckets))
         m.update(kv)
         tmp = self._compact_meta_path + ".tmp"
         with open(tmp, "w") as f:
@@ -713,11 +713,9 @@ class IncrementalNearDedup(IncrementalDedup):
         verdict #2): the first deep pass (or ``full_deep=True``) runs all
         three families over the whole doc state and records the highest
         batch_id covered in ``_compact_meta.json``; every later deep pass
-        scopes candidate GENERATION to docs admitted after the watermark —
-        minhash/simhash pairing runs only over (band, bucket) keys those
-        docs touch, containment probes only pairs with a new doc on one side
-        (:func:`~..operators.containment.containment_candidates_scoped`) —
-        then advances the watermark. Inductive contract: the pass that set
+        scopes candidate GENERATION to docs admitted after the watermark
+        (the ``scope`` of :func:`~..operators.edges.rule_edges`), then
+        advances the watermark. Inductive contract: the pass that set
         watermark W verified every candidate pair among docs ≤ W (full base
         case + scoped steps), so old-old pairs never need regenerating and
         recurring deep cost is proportional to NEW docs (plus a columnar
@@ -1122,42 +1120,21 @@ class IncrementalNearDedup(IncrementalDedup):
                     os.link(sp, os.path.join(ddir, fn))
 
     def _deep_edges(self, scope_docs: DataFrame | None = None):
-        """The batch pipeline's edges stage, re-run over doc state.
+        """The batch pipeline's fuzzy edges
+        (:func:`~..operators.edges.rule_edges`), re-run over doc state.
 
-        Doc state is text-self-contained (doc_id, shingles, n_shingles,
-        bands, simhash64, bottomk, text_norm), so candidate generation and
-        verify need NO access to the original pages: minhash band self-join
-        (``lsh.candidate_pairs`` over ``band_buckets``), SimHash
-        block-combination + Hamming filter, and containment
-        (bottom-k postings → Bloom → exact verify) all read state columns,
-        and the unified text-verify kernel (``verify_tagged_pairs``) joins
-        the stored ``text_norm`` — the same operators, gates, and thresholds
-        as ``plans/pipeline.py`` ``_edges`` (reference semantics:
-        ``deduplicator.py:117-139`` cascade over a full re-harvest). Column
-        pruning keeps each family's state scan narrow. Returns a
-        lineage-cut (id1, id2) frame, or ``None`` with no state. Raises on
-        state written by a pre-deep version (no text/bands columns): deep
-        compaction cannot be retrofitted onto lossy state — re-ingest or run
-        the batch pipeline over the raw pages instead.
-
-        ``scope_docs`` (incremental mode): a frame of doc_ids admitted since
-        the last deep pass. Candidate generation is scoped — minhash/simhash
-        pairing runs only over the (band, bucket) keys those docs touch
-        (key derivation is a narrow column explode; the semi-join prunes
-        BEFORE the pairing aggregation, so the candidate shuffle is
-        O(touched buckets) not O(corpus)), pairs are filtered to those
-        involving a scope doc (old-old pairs in a touched bucket were
-        already verified by the pass that set the watermark), and
-        containment uses the stored-shingle probe form
-        (:func:`~..operators.containment.containment_candidates_scoped`).
-        Verify then runs only over the scoped pair set. Returns ``None``
-        when no scope doc has a doc-state row (nothing new to link).
+        Doc state is text-self-contained (doc_id, n_shingles, bands,
+        simhash64, bottomk, text_norm), so no original page is re-read.
+        ``scope_docs`` (incremental mode) is the doc_ids admitted since the
+        last deep pass; ``rule_edges`` keeps only pairs involving one of
+        them. Returns a lineage-cut (id1, id2) frame, or ``None`` with no
+        state or no scope doc in it. Raises on state written by a pre-deep
+        version: re-ingest, or run the batch pipeline over the raw pages.
         """
         from pyspark.storagelevel import StorageLevel
 
-        from ..operators import containment as cont
         from ..operators import lsh
-        from ..operators import verify as vfy
+        from ..operators.edges import rule_edges
 
         if not os.path.isdir(self.docsig_dir):
             return None
@@ -1184,76 +1161,22 @@ class IncrementalNearDedup(IncrementalDedup):
                 "re-ingest, or run the batch pipeline over the raw pages"
             )
         state = state.persist(StorageLevel.MEMORY_AND_DISK)
-        new_state = None
         try:
-            texts = state.select("doc_id", "text_norm")
-            if scope_docs is None:
-                mh_pairs = lsh.candidate_pairs(
-                    lsh.band_buckets(state, self.cfg), self.cfg
-                )
-                contain_cand = cont.containment_candidates(state, texts, self.cfg)
-                sim = lsh.simhash_candidate_pairs(state, self.cfg)
-            else:
-                scope = scope_docs.select("doc_id")
-                new_state = state.join(scope, on="doc_id", how="left_semi").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                if not new_state.limit(1).count():
-                    return None
-
-                def involving(pairs: DataFrame) -> DataFrame:
-                    p1 = pairs.join(
-                        scope.select(F.col("doc_id").alias("id1")),
-                        on="id1",
-                        how="left_semi",
-                    )
-                    p2 = pairs.join(
-                        scope.select(F.col("doc_id").alias("id2")),
-                        on="id2",
-                        how="left_semi",
-                    )
-                    return (
-                        p1.select("id1", "id2")
-                        .unionByName(p2.select("id1", "id2"))
-                        .distinct()
-                    )
-
-                mh_keys = lsh.band_buckets(state, self.cfg).join(
-                    lsh.band_buckets(new_state, self.cfg)
-                    .select("band", "bucket")
-                    .distinct(),
-                    on=["band", "bucket"],
-                    how="left_semi",
-                )
-                mh_pairs = involving(lsh.candidate_pairs(mh_keys, self.cfg))
-                contain_cand = cont.containment_candidates_scoped(
-                    state, texts, scope, self.cfg
-                )
-                sim_keys = lsh.simhash_band_keys(state, self.cfg).join(
-                    lsh.simhash_band_keys(new_state, self.cfg)
-                    .select("band", "bucket")
-                    .distinct(),
-                    on=["band", "bucket"],
-                    how="left_semi",
-                )
-                sp, gated = vfy.gate_broadcast_info(
-                    involving(lsh.candidate_pairs(sim_keys, self.cfg)),
-                    self.cfg.broadcast_pair_limit,
-                )
-                sim = lsh.hamming_edges(sp, state, self.cfg, gated=gated)
-            mh = mh_pairs.select("id1", "id2", F.lit("minhash").alias("rule"))
-            contain = contain_cand.select(
-                F.col("small_id").alias("id1"),
-                F.col("big_id").alias("id2"),
-                F.lit("contain").alias("rule"),
+            scope = None if scope_docs is None else scope_docs.select("doc_id")
+            if scope is not None and not (
+                state.join(scope, on="doc_id", how="left_semi").limit(1).count()
+            ):
+                return None
+            edges, _, _ = rule_edges(
+                state,
+                state.select("doc_id", "text_norm"),
+                lsh.band_buckets(state, self.cfg),
+                self.cfg,
+                scope,
             )
-            fuzzy = vfy.verify_tagged_pairs(mh.unionByName(contain), texts, self.cfg)
-            out = fuzzy.select("id1", "id2").unionByName(sim.select("id1", "id2"))
             # materialize before unpersisting the state scan the plan hangs on
-            return out.localCheckpoint(eager=True)
+            return edges.select("id1", "id2").localCheckpoint(eager=True)
         finally:
-            if new_state is not None:
-                new_state.unpersist()
             state.unpersist()
 
 

@@ -1068,3 +1068,18 @@ def test_reopen_with_different_state_buckets_rejected(spark):
     with pytest.raises(ValueError, match="n_state_buckets"):
         IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=16)
     shutil.rmtree(state)
+
+
+def test_state_buckets_stamped_before_first_compaction(spark, tiny_pages):
+    """The bucket count is stamped when the state dir is created: a reopen
+    with a different one is rejected even if no compaction ever ran."""
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
+
+    state = tempfile.mkdtemp(prefix="stream-stamp-")
+    cfg = DedupConfig(shuffle_partitions=8)
+    inc = IncrementalNearDedup(spark, state, cfg, n_state_buckets=8)
+    inc.process_batch(pipeline_input(tiny_pages).limit(20), 0)
+    IncrementalNearDedup(spark, state, cfg, n_state_buckets=8)
+    with pytest.raises(ValueError, match="n_state_buckets"):
+        IncrementalNearDedup(spark, state, cfg, n_state_buckets=16)
+    shutil.rmtree(state)

@@ -317,3 +317,46 @@ def test_duplicate_pairs_bounded_and_correct(spark):
         pipe.duplicate_pairs(max_cluster_size=1000)
     # an explicit higher cap still materializes the full combination set
     assert pipe.duplicate_pairs(max_cluster_size=3000).count() == 3000 * 2999 // 2
+
+
+def test_pipeline_and_deep_compactor_build_the_same_edges(spark):
+    """The batch edges stage and an unscoped deep compaction compose the
+    fuzzy rule families in one place (operators/edges.py), so on the same
+    corpus they must link the same pairs: both keep the min doc_id per
+    content digest, so their representatives match. A scope covering every
+    doc must not change the pair set either."""
+    from infoscience_imports_spark.operators import lsh
+    from infoscience_imports_spark.operators.edges import rule_edges
+    from infoscience_imports_spark.sources.synthetic import generate_web_pages
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
+
+    cfg = DedupConfig(shuffle_partitions=8)
+    pages = pipeline_input(generate_web_pages(spark, 300, seed=19, interleave=True)).cache()
+    store = CheckpointStore(spark, tempfile.mkdtemp(prefix="wh-parity-"))
+    pipe = DedupPipeline(spark, store, cfg, input_fingerprint="parity300")
+    pipe.run(pages)
+    batch_pairs = {
+        (r["id1"], r["id2"])
+        for r in store.read("edges", pipe.fingerprint("edges"))
+        .filter(F.col("rule") != "exact")
+        .collect()
+    }
+    assert {"minhash", "contain", "simhash"} <= {
+        r["rule"] for r in store.read("edges", pipe.fingerprint("edges")).collect()
+    }
+
+    inc = IncrementalNearDedup(spark, tempfile.mkdtemp(prefix="stream-parity-"), cfg)
+    inc.process_batch(pages, 0)
+    deep_pairs = {(r["id1"], r["id2"]) for r in inc._deep_edges().distinct().collect()}
+    assert deep_pairs == batch_pairs
+
+    state = spark.read.parquet(inc.docsig_dir).cache()
+    texts = state.select("doc_id", "text_norm")
+    buckets = lsh.band_buckets(state, cfg)
+
+    def pairs(scope):
+        edges, _, _ = rule_edges(state, texts, buckets, cfg, scope)
+        return {(r["id1"], r["id2"]) for r in edges.select("id1", "id2").distinct().collect()}
+
+    assert pairs(state.select("doc_id")) == pairs(None) == deep_pairs
+    state.unpersist()

@@ -131,3 +131,23 @@ def test_prefix_filter_matches_bruteforce_across_thresholds(spark, tmp_path):
             for r in E._bruteforce_jaccard_pairs(spark, str(tmp_path), threshold=thr).collect()
         }
         assert got == expected, (thr, got ^ expected)
+
+
+def test_t_par_unknown_size_adds_no_repartition(spark, tmp_path, monkeypatch):
+    """The `_t_par` gate fails closed: a table whose size probe reads 0
+    bytes (empty or unlistable path) is returned as scanned, while the same
+    small table measured at its real size still gets the repartition."""
+    import os
+
+    import __spark_entry__ as E
+
+    spark.range(10).write.parquet(str(tmp_path / "t.parquet"))
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    assert "Repartition" in plan(E._t_par(spark, str(tmp_path), "t", key="id"))
+    monkeypatch.setattr(os.path, "getsize", lambda _p: 0)
+    assert "Repartition" not in plan(E._t_par(spark, str(tmp_path), "t", key="id"))
+    monkeypatch.setattr(os, "walk", lambda _p: iter(()))
+    assert "Repartition" not in plan(E._t_par(spark, str(tmp_path), "t"))
