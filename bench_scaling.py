@@ -26,14 +26,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def worker(cores: int, corpus: str) -> None:
     from infoscience_imports_spark.config import DedupConfig
     from infoscience_imports_spark.plans.pipeline import DedupPipeline
@@ -41,22 +33,12 @@ def worker(cores: int, corpus: str) -> None:
     from infoscience_imports_spark.sources.catalog import CheckpointStore
     from infoscience_imports_spark.sources.synthetic import generate_web_pages, pipeline_input
 
-    # The extract/signature kernels are CPU-dense (~2 MB/s/core), so scan
-    # splits must be sized to a few seconds of kernel work or the run is
-    # task-starved/raggedly balanced at the higher core count (round-1: 32 MB
-    # splits gave ~12 uneven tasks at 8 cores). But every mapInPandas task
-    # also pays an Arrow worker handshake (~100 ms), so splits must not be
-    # too SMALL either: 12/core put 181 extract tasks through 8 workers and
-    # doubled the stage (8.1 s vs 4.8 s at 4/core). Target ~4 splits/core.
-    split = min(32 << 20, max(1 << 20, _dir_bytes(corpus) // (4 * cores)))
+    # get_spark's own scan-split defaults: the scaling evidence measures the
+    # shipped configuration (one split policy, session.py)
     spark = get_spark(
         app_name=f"scale-{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=max(2 * cores, 8),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(split),
-            "spark.sql.files.openCostInBytes": str(min(split // 4, 1 << 20)),
-        },
     )
     cfg = DedupConfig(shuffle_partitions=max(2 * cores, 8))
     # warm the JIT/codegen paths with a small run (untimed)

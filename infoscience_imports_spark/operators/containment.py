@@ -48,6 +48,7 @@ from ..caching import persist_tracked
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions.shingles import shingle_hashes, token_hashes
 from ..functions.substring import contains_substring
+from ..session import job_description
 from .verify import gate_broadcast
 
 _POSTINGS_SCHEMA = StructType(
@@ -109,11 +110,12 @@ def build_bloom(hashes: DataFrame, col: str, n_items: int, bits_per_item: int = 
     parts = src.mapInPandas(
         kernel, schema=StructType([StructField("bitmap", BinaryType(), False)])
     )
-    merged = parts.rdd.map(lambda r: r[0]).treeReduce(
-        lambda a, b: np.bitwise_or(
-            np.frombuffer(a, dtype=np.uint8), np.frombuffer(b, dtype=np.uint8)
-        ).tobytes()
-    )
+    with job_description(hashes.sparkSession, "containment: Bloom filter treeReduce"):
+        merged = parts.rdd.map(lambda r: r[0]).treeReduce(
+            lambda a, b: np.bitwise_or(
+                np.frombuffer(a, dtype=np.uint8), np.frombuffer(b, dtype=np.uint8)
+            ).tobytes()
+        )
     return bytes(merged), m_bits
 
 

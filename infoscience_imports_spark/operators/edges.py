@@ -22,6 +22,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..caching import persist_tracked
 from ..config import DedupConfig
+from ..session import job_description
 from . import containment as cont
 from . import lsh
 from . import verify
@@ -126,7 +127,8 @@ def rule_edges(
     if scope is not None:
         cands = _involving(cands, scope)
     cands = persist_tracked(cands)
-    n_cands = cands.count()
+    with job_description(cands.sparkSession, "rule_edges: gated candidate count"):
+        n_cands = cands.count()
     small = n_cands <= cfg.broadcast_pair_limit
     fz_pairs = cands.filter(F.col("rule") != "simhash")
     sh_pairs = cands.filter(F.col("rule") == "simhash").select("id1", "id2")

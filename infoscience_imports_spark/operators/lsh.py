@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
+from ..session import job_description
 
 
 def band_buckets(signatures: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -99,7 +100,9 @@ def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> Da
     NOT fully lazy: the hot-slice probe below runs a bounded Spark job
     (limit+1 collect) at plan-construction time. Callers building
     speculative plans pay that probe even if the returned frame is never
-    executed; it is one stats aggregation over the bucket table.
+    executed; it is one stats aggregation over the bucket table. With no
+    hot bucket, every bucket pairs directly; a hot slice of at most
+    ``hot_collect_limit`` rows becomes a literal, a larger one a subtree.
     """
     # NB (round 6): persisting this repartitioned frame so the probe job and
     # the caller's action share the exchange was tried and REVERTED — the
@@ -122,11 +125,19 @@ def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> Da
     # corpora with a pathological hot-bucket count (measured, not guessed:
     # limit+1 probe) keep the subtree form — driver memory is bounded
     # either way.
-    hot_rows = hot.limit(cfg.hot_collect_limit + 1).collect()
-    if len(hot_rows) <= cfg.hot_collect_limit:
-        hot = buckets.sparkSession.createDataFrame(hot_rows, schema=hot.schema)
+    with job_description(buckets.sparkSession, "candidate_pairs: hot-bucket probe"):
+        hot_rows = hot.limit(cfg.hot_collect_limit + 1).collect()
+    if hot_rows and len(hot_rows) <= cfg.hot_collect_limit:
+        # pandas -> Arrow: a JVM-side local relation (a list of Rows would
+        # be a PythonRDD that every broadcast build re-runs)
+        import pandas as pd
 
-    small = pre.join(
+        hot = buckets.sparkSession.createDataFrame(
+            pd.DataFrame.from_records(hot_rows, columns=hot.columns), schema=hot.schema
+        )
+
+    # no hot bucket: every bucket is bounded, so no anti-join and no star join
+    small = pre if not hot_rows else pre.join(
         F.broadcast(hot.select("band", "bucket")), on=["band", "bucket"], how="left_anti"
     )
     # Non-hot buckets hold <= bucket_cap docs (the anti-join guarantees it),
@@ -151,6 +162,8 @@ def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> Da
         .select(F.explode(pair_expr).alias("p"))
         .select("p.id1", "p.id2")
     )
+    if not hot_rows:
+        return small_pairs.distinct()
 
     # hot buckets: star pairing against the two hubs carried in the broadcast
     # stats slice — map-side join + inline hub explode, no second aggregation

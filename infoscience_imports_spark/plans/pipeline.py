@@ -18,7 +18,11 @@ Physical-plan notes (designed for 100 TB, verified on local[32]):
     sets) — Python appears only in the Arrow signature kernel and the final
     substring check on containment survivors;
   * components are iterative large-star/small-star self-joins with salted
-    hub keys (operators/components.py).
+    hub keys (operators/components.py);
+  * scan splits follow ONE policy, Spark's own bytes-per-core rule
+    ``min(maxPartitionBytes, max(openCostInBytes, bytes / cores))`` under
+    the session's 32 MB cap (session.py): below cores x 32 MB, one split
+    and one Python kernel task wave per core; above, the cap sets the count.
 """
 
 from __future__ import annotations
@@ -29,13 +33,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..operators import components as comp
 from ..operators import lsh
 from ..operators import signatures as sigs
 from ..operators.edges import rule_edges
 from ..operators import verify
-from ..functions.text import extract_text_col, normalize_text_col
 from ..sources.catalog import CheckpointStore, chain_fingerprint
 
 STAGES = ("extract", "signatures", "buckets", "edges", "components")
@@ -79,7 +83,7 @@ class DedupPipeline:
 
     # -- stage bodies ----------------------------------------------------------
     def _extract(self, pages: DataFrame) -> DataFrame:
-        # Scan parallelism comes from file splits (32 MB, session.py) — a
+        # Scan parallelism comes from file splits (session.py) — a
         # repartition here would push the whole html corpus through a
         # disk-bound shuffle and cap scaling at disk bandwidth.
         #
@@ -237,52 +241,6 @@ class DedupPipeline:
         docs = extract_df.select("doc_id")
         return comp.attach_clusters(docs, assign).select("doc_id", "cluster_id")
 
-    # -- scan-split tuning ------------------------------------------------------
-    _STAGE_SCAN_INPUT = {
-        "signatures": "extract",
-        "buckets": "signatures",
-        "edges": "extract",  # dominant scan: rep_texts from the extract snapshot
-        "components": "edges",
-    }
-
-    def _tune_scan_splits(self, stage: str) -> None:
-        """Size ``maxPartitionBytes`` to ~4 scan splits per core for THIS
-        stage's dominant input snapshot.
-
-        The kernel-heavy stages read snapshots of very different sizes (raw
-        html vs extracted text vs narrow buckets); one session-wide split
-        size either starves the big scan or shreds the small one into
-        hundreds of tasks that each pay the ~100 ms Arrow worker handshake.
-        Local-path sizing only (object-store deployments fall back to the
-        session setting — on a cluster the equivalent knob is per-stage job
-        conf via ``spark.conf.set`` exactly as done here).
-        """
-        import os
-
-        src = self._STAGE_SCAN_INPUT.get(stage)
-        if src is None:
-            return
-        snap = os.path.join(
-            self.store._snap_dir(src, self.fingerprint(src)), "data"
-        )
-        if not os.path.isdir(snap):
-            return
-        total = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(snap)
-            for f in fs
-        )
-        if total <= 0:
-            # empty or unlistable snapshot: an unknown size leaves the conf
-            # untouched rather than forcing the 1 MB floor split
-            return
-        par = self.spark.sparkContext.defaultParallelism
-        split = min(128 << 20, max(1 << 20, total // (4 * par)))
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        self.spark.conf.set(
-            "spark.sql.files.openCostInBytes", str(min(split // 4, 1 << 20))
-        )
-
     # -- driver ---------------------------------------------------------------
     def run(
         self,
@@ -291,8 +249,6 @@ class DedupPipeline:
         resume: bool = True,
     ) -> PipelineResult:
         res = PipelineResult(run_id=self.store.run_id)
-        prev_split = self.spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        prev_open = self.spark.conf.get("spark.sql.files.openCostInBytes", None)
         for stage in STAGES:
             fp = self.fingerprint(stage)
             res.fingerprints[stage] = fp
@@ -302,23 +258,16 @@ class DedupPipeline:
                 res.timings[stage] = 0.0
                 continue
             t0 = time.monotonic()
-            self._tune_scan_splits(stage)
             df, key = self._build_stage(stage, pages)
             info = self.store.write(stage, df, fp, key_col=key)
             for cached in self._stage_persists:
                 cached.unpersist()
             self._stage_persists.clear()
-            # operator-internal tracked persists (candidate_pairs' bucket
-            # cache) are scoped to the stage that created them
-            from .. import caching as _caching
-
-            _caching.release_all()
+            # operator-internal tracked persists (rule_edges' candidate
+            # frame) are scoped to the stage that created them
+            caching.release_all()
             res.timings[stage] = time.monotonic() - t0
             res.rows[stage] = info.rows
-        if prev_split is not None:
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-        if prev_open is not None:
-            self.spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
         return res
 
     def _build_stage(self, stage: str, pages: DataFrame) -> tuple[DataFrame, str]:

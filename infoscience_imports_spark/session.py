@@ -10,6 +10,7 @@ the same builder is used by ``spark-submit --py-files`` (see ``cli.py``) with
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -46,11 +47,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        # 32 MB splits: the extract/signature kernels are CPU-dense (~2 MB/s
-        # per core through the regex+MinHash path), so scan splits — not a
-        # repartition shuffle — must provide the parallelism. At petabyte
-        # scale this yields more tasks than the 128 MB default; that is the
-        # correct trade for kernels this hot (AQE coalesces downstream).
+        # One split policy, Spark's bytes-per-core rule min(maxPartitionBytes,
+        # max(openCostInBytes, bytes / cores)): below cores x 32 MB, one split
+        # (one Python kernel task wave) per core; above, the cap sets the split
+        # count. The kernels are CPU-dense (~2 MB/s per core), so splits, not a
+        # repartition shuffle, provide the parallelism.
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
@@ -75,3 +76,16 @@ def _parallelism_of(master: str, default: int) -> int:
         except ValueError:
             return default
     return default
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Describe the block's eager jobs (Spark UI, event log); job groups
+    are left alone, since run harnesses attribute jobs by group."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)

@@ -40,6 +40,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..session import job_description
 
 
 def chain_fingerprint(*parts: str) -> str:
@@ -162,7 +165,9 @@ class CheckpointStore:
         # per-file lineage from the committed bytes (not the logical plan).
         # The checksum hashes the key column (order-insensitive sum) — full
         # row hashing would re-read every wide column a second time per stage.
-        written = self.spark.read.parquet(data_dir)
+        # The frame's own schema is what was written, so the read-back skips
+        # the footer-inference job.
+        written = self.spark.read.schema(df.schema).parquet(data_dir)
         key = F.col(key_col) if key_col and key_col in written.columns else F.lit(None)
         # group on the raw file name; the tmp-dir -> final-path rewrite is a
         # per-FILE string fix applied after aggregation (a regexp_replace
@@ -170,22 +175,23 @@ class CheckpointStore:
         # JVM-CPU-seconds on one 6.4M-row commit)
         import re as _re
 
-        manifest_rows = (
-            written.select(
-                F.input_file_name().alias("file"),
-                key.alias("_k"),
+        with job_description(self.spark, f"commit {stage}: per-file manifest"):
+            manifest_rows = (
+                written.select(
+                    F.input_file_name().alias("file"),
+                    key.alias("_k"),
+                )
+                .groupBy("file")
+                .agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.coalesce(
+                        F.sum(F.pmod(F.xxhash64("_k"), F.lit(1 << 31))), F.lit(0)
+                    ).alias("checksum"),
+                    F.min("_k").cast("string").alias("min_key"),
+                    F.max("_k").cast("string").alias("max_key"),
+                )
+                .collect()
             )
-            .groupBy("file")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(
-                    F.sum(F.pmod(F.xxhash64("_k"), F.lit(1 << 31))), F.lit(0)
-                ).alias("checksum"),
-                F.min("_k").cast("string").alias("min_key"),
-                F.max("_k").cast("string").alias("max_key"),
-            )
-            .collect()
-        )
         _fix = lambda p: _re.sub(r"\.tmp-[0-9a-f]+/", "/", p)  # noqa: E731
         # one row per data FILE (bounded by task count, ~10^4-10^5 even at
         # petabyte stages with AQE coalescing) — small enough to land on the
@@ -224,11 +230,10 @@ class CheckpointStore:
         )
         pq.write_table(table, os.path.join(tmp, "manifest.parquet"))
         total = sum(r["rows"] for r in manifest_rows)
+        meta = {"stage": stage, "fingerprint": fingerprint, "rows": total, "run_id": self.run_id}
+        meta["schema"] = df.schema.jsonValue()  # read() passes it back: no inference job
         with open(os.path.join(tmp, "_meta.json"), "w") as f:
-            json.dump(
-                {"stage": stage, "fingerprint": fingerprint, "rows": total, "run_id": self.run_id},
-                f,
-            )
+            json.dump(meta, f)
 
         if os.path.isdir(snap):
             shutil.rmtree(snap)
@@ -238,8 +243,6 @@ class CheckpointStore:
         history = self.snapshots(stage)
         snap_id = (history[-1]["snapshot_id"] + 1) if history else 1
         parent = history[-1]["snapshot_id"] if history else None
-        from datetime import datetime, timezone
-
         self._append_log(
             stage,
             {
@@ -263,7 +266,25 @@ class CheckpointStore:
         fp = fingerprint or self.latest_fingerprint(stage)
         if fp is None:
             raise FileNotFoundError(f"no committed snapshot for stage {stage!r}")
-        return self.spark.read.parquet(os.path.join(self._snap_dir(stage, fp), "data"))
+        return self._read_data(self._snap_dir(stage, fp))
+
+    def _read_data(self, snap: str) -> DataFrame:
+        """A snapshot's rows under the schema recorded at commit, so building
+        the frame runs no Spark job. Snapshots committed before the schema
+        was recorded fall back to footer inference."""
+        schema = self._meta(snap).get("schema")
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(os.path.join(snap, "data"))
+
+    @staticmethod
+    def _meta(snap: str) -> dict:
+        meta = os.path.join(snap, "_meta.json")
+        if not os.path.isfile(meta):
+            return {}
+        with open(meta) as f:
+            return json.load(f)
 
     # -- time travel (Iceberg VERSION AS OF / TIMESTAMP AS OF) -----------------
     def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
@@ -278,7 +299,7 @@ class CheckpointStore:
                             else ""
                         )
                     )
-                return self.spark.read.parquet(os.path.join(e["path"], "data"))
+                return self._read_data(e["path"])
         raise FileNotFoundError(f"stage {stage!r} has no snapshot {snapshot_id}")
 
     def read_as_of(self, stage: str, timestamp_iso: str) -> DataFrame:
@@ -367,11 +388,7 @@ class CheckpointStore:
         fp = fingerprint or self.latest_fingerprint(stage)
         if fp is None:
             return None
-        meta = os.path.join(self._snap_dir(stage, fp), "_meta.json")
-        if not os.path.isfile(meta):
-            return None
-        with open(meta) as f:
-            return json.load(f).get("rows")
+        return self._meta(self._snap_dir(stage, fp)).get("rows")
 
     def latest_fingerprint(self, stage: str) -> str | None:
         latest = self._latest_file(stage)

@@ -176,3 +176,44 @@ def test_config_change_invalidates_fingerprints(spark):
     p3 = DedupPipeline(spark, store, DedupConfig(), input_fingerprint="y")
     assert p1.fingerprint("extract") != p3.fingerprint("extract")
     shutil.rmtree(wh)
+
+
+def test_snapshot_reads_carry_their_schema_and_launch_no_job(spark):
+    """A committed snapshot records its schema, so read/read_snapshot build
+    the frame without a footer-inference job; the recorded schema is the
+    one inference would find."""
+    import json
+
+    wh = tempfile.mkdtemp(prefix="wh-ck9-")
+    store = CheckpointStore(spark, wh)
+    # non-nullable id and array elements: files store every column nullable
+    df = spark.range(1, 3).select(
+        "id",
+        F.when(F.col("id") == 1, "a").alias("v"),
+        F.array(F.lit(1.0), F.col("id").cast("double")).alias("xs"),
+    )
+    store.write("tbl", df, "fp1", key_col="id")
+    data = os.path.join(store._snap_dir("tbl", "fp1"), "data")
+    sc = spark.sparkContext
+    sc.setJobGroup("ck9-read", "snapshot reads")
+    try:
+        by_fp = store.read("tbl", "fp1")
+        by_id = store.read_snapshot("tbl", 1)
+        assert list(sc.statusTracker().getJobIdsForGroup("ck9-read")) == []
+    finally:
+        sc.setJobGroup("", "")
+    inferred = spark.read.parquet(data)
+    assert by_fp.schema == inferred.schema == by_id.schema
+    assert sorted(by_fp.collect()) == sorted(inferred.collect())
+
+    # a snapshot committed before the schema was recorded still reads
+    meta_path = os.path.join(store._snap_dir("tbl", "fp1"), "_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    assert store.read("tbl", "fp1").schema == inferred.schema
+    assert store.read_snapshot("tbl", 1).count() == 2
+    assert store.rows("tbl", "fp1") == 2
+    shutil.rmtree(wh)

@@ -6,6 +6,7 @@ SimHash-title rules, closed with union-find. Asserts dup-pair recall >= 0.99
 (BASELINE.json metric) and exact agreement with planted classes.
 """
 
+import shutil
 import tempfile
 
 import pytest
@@ -290,6 +291,69 @@ def test_candidate_pairs_no_self_pairs_on_duplicate_bucket_rows(spark):
     buckets = spark.createDataFrame(rows, "band int, bucket string, doc_id bigint")
     got = {(r["id1"], r["id2"]) for r in candidate_pairs(buckets).collect()}
     assert got == {(1, 2)}, got
+
+
+def _bucket_pairs_reference(rows, cap):
+    """Brute force per bucket: all pairs at <= cap docs, else the star
+    against the bucket's min and max doc_id."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    members = defaultdict(set)
+    for band, bucket, doc in rows:
+        members[(band, bucket)].add(doc)
+    pairs = set()
+    for docs in members.values():
+        if len(docs) <= cap:
+            pairs |= set(combinations(sorted(docs), 2))
+        else:
+            pairs |= {
+                (min(d, h), max(d, h)) for d in docs for h in (min(docs), max(docs)) if d != h
+            }
+    return pairs
+
+
+@pytest.mark.parametrize("hot", [False, True], ids=["no_hot_bucket", "hot_bucket"])
+def test_candidate_pairs_matches_bruteforce_on_every_hot_slice_path(spark, hot):
+    """All three probe branches give the brute-force pair set: no hot
+    bucket (direct pairing), a hot slice under ``hot_collect_limit`` (a
+    JVM-side literal, no Python-built RDD) and one above it (the plan
+    subtree, forced with ``hot_collect_limit=0``)."""
+    import random
+    from collections import Counter
+
+    from infoscience_imports_spark.operators.lsh import candidate_pairs
+
+    cap = 4
+    rnd = random.Random(7)
+    rows = [(band, rnd.randrange(40), doc) for doc in range(60) for band in range(3)]
+    sizes = Counter((band, bucket) for band, bucket, _ in rows)
+    # keep the cold table under the cap, then plant one bucket above it
+    rows = [r for r in rows if sizes[r[:2]] <= cap]
+    if hot:
+        rows += [(9, 0, doc) for doc in range(100, 100 + 3 * cap)]
+    # a parquet scan: the only in-memory relation a plan can then hold is
+    # the hot-slice literal itself
+    path = tempfile.mkdtemp(prefix="cand-buckets-")
+    spark.createDataFrame(rows, "band int, bucket long, doc_id bigint").write.mode(
+        "overwrite"
+    ).parquet(path)
+    buckets = spark.read.parquet(path)
+    want = _bucket_pairs_reference(rows, cap)
+    assert want
+
+    for limit in (100_000, 0):
+        out = candidate_pairs(buckets, DedupConfig(bucket_cap=cap, hot_collect_limit=limit))
+        got = [(r["id1"], r["id2"]) for r in out.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == want, (hot, limit)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, plan
+        if not hot:
+            assert "Join" not in plan, plan
+        else:
+            assert ("LocalRelation" in plan) == bool(limit), plan
+    shutil.rmtree(path)
 
 
 def test_duplicate_pairs_bounded_and_correct(spark):

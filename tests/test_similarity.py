@@ -387,3 +387,27 @@ def test_ann_ivf2_two_level_recall_and_collect_guard(spark):
     with pytest.raises(ValueError, match="distributed"):
         ann_ivf2_topk(queries, df, n_cells=100, max_collect_cells=64)
     df.unpersist()
+
+
+def test_lsh_density_fallback_releases_band_cache(spark, planted, monkeypatch):
+    """Dense 1-bit bands trip the density gate; the fallback to the exact
+    blocked kernel must leave no persisted band table behind."""
+    from pyspark.storagelevel import StorageLevel
+
+    from infoscience_imports_spark import caching
+
+    df, sims = planted
+    real, persisted = caching.persist_tracked, []
+
+    def spy(frame, *args):
+        persisted.append(real(frame, *args))
+        return persisted[-1]
+
+    monkeypatch.setattr(caching, "persist_tracked", spy)
+    got = {
+        (r["id1"], r["id2"])
+        for r in similar_pairs_lsh(df, threshold=0.9, dim=DIM, bands=4, rows_per_band=1).collect()
+    }
+    assert got == _true_pairs(sims, 0.9)  # the exact blocked answer
+    assert len(persisted) == 1
+    assert persisted[0].storageLevel == StorageLevel.NONE
