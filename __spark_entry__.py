@@ -184,7 +184,7 @@ def _bruteforce_jaccard_pairs(spark, sf_dir, threshold=0.70):
     """Exact 5-gram Jaccard pairs via prefix-filtered AllPairs (Bayardo,
     Ma, Srikant, "Scaling Up All Pairs Similarity Search", WWW'07 — public
     literature). Output identical to the naive inverted-index join; the
-    candidate join touches only each doc's PREFIX postings.
+    candidate pairing touches only each doc's PREFIX postings.
 
     Why: the naive posting self-join emits O(c^2) rows for a shingle shared
     by c docs (round-2 verdict #3 — boilerplate shingles made this the most
@@ -194,10 +194,12 @@ def _bruteforce_jaccard_pairs(spark, sf_dir, threshold=0.70):
     boilerplate shingles land LAST) and index only the first
     n - ceil(t*n) + 1 of them. J(A,B) >= t implies |A∩B| >= ceil(t*max) >=
     ceil(t*n_A), and two sets with that much overlap must collide inside
-    these prefixes (pigeonhole on the shared order), so the prefix join is a
-    superset of the answer; a length filter (min >= t*max) prunes further,
-    and the exact Jaccard on the full hash arrays (JVM array_intersect)
-    removes false candidates."""
+    these prefixes (pigeonhole on the shared order), so pairing the docs
+    that share a prefix shingle (``lsh.all_key_pairs``: group by shingle,
+    combinations map-side, no self-join) yields a superset of the answer; a
+    length filter (min >= t*max, implied by J >= t) prunes before the exact
+    Jaccard on the full hash arrays (JVM array_intersect) removes false
+    candidates."""
     hs = _cached(_doc_shingles_hashed(spark, sf_dir))
     postings = hs.select("doc_id", "n", F.explode("shs").alias("s"))
     freq = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -216,42 +218,27 @@ def _bruteforce_jaccard_pairs(spark, sf_dir, threshold=0.70):
             <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n") - F.lit(eps)) + 1
         )
         # df == 1 prefix postings can never produce a candidate: the shingle
-        # exists in exactly one document, so the a.s == b.s equi-join has no
-        # cross-document partner for it. Dropping them AFTER the rank (the
-        # prefix selection itself is unchanged) shrinks both self-join inputs
-        # — most shingles are unique, so this removes the bulk of the pair
-        # join's shuffle (guide §2.3 "shuffle fewer bytes")
+        # exists in exactly one document, so it has no cross-document
+        # partner. Dropping them AFTER the rank (the prefix selection itself
+        # is unchanged) shrinks the pairing input — most shingles are unique,
+        # so this removes the bulk of its shuffle (guide §2.3 "shuffle fewer
+        # bytes")
         .filter(F.col("df") > 1)
-        .select("doc_id", "n", "s")
+        .select("s", "doc_id")
     )
-    # prefix postings are still O(corpus): pin shuffle-hash (a size-estimate
-    # flip to broadcast would build a corpus-sized hash relation — the
-    # anti-scaling class the LSH candidate stage eliminated outright in
-    # round 4, operators/lsh.py)
-    a = pref.alias("a").hint("shuffle_hash")
-    b = pref.alias("b").hint("shuffle_hash")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.s") == F.col("b.s"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-                # same epsilon rationale as the prefix bound: over-inclusion
-                # is safe (the exact Jaccard filter prunes), exclusion at an
-                # exact-integer boundary is a wrong answer
-                F.least("a.n", "b.n")
-                >= F.lit(threshold) * F.greatest("a.n", "b.n") - F.lit(1e-9),
-            ],
-        )
-        .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-        .distinct()
-    )
+    cand = lsh.all_key_pairs(pref)
     h1 = hs.select(F.col("doc_id").alias("id1"), F.col("shs").alias("sh1"), F.col("n").alias("n1"))
     h2 = hs.select(F.col("doc_id").alias("id2"), F.col("shs").alias("sh2"), F.col("n").alias("n2"))
     inter = F.size(F.array_intersect("sh1", "sh2"))
     return (
         cand.join(h1, on="id1")
         .join(h2, on="id2")
+        # same epsilon rationale as the prefix bound: over-inclusion is safe
+        # (the exact Jaccard filter prunes), exclusion at an exact-integer
+        # boundary is a wrong answer
+        .filter(
+            F.least("n1", "n2") >= F.lit(threshold) * F.greatest("n1", "n2") - F.lit(eps)
+        )
         .withColumn("jaccard", inter / (F.col("n1") + F.col("n2") - inter))
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
@@ -677,16 +664,20 @@ def q3_shipping_priority(spark, sf_dir):
     price = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
     one = F.lit(1).cast("decimal(4,2)")
-    # pin the build side of the lineitem join: without the hint the planner's
-    # size estimate flips to broadcasting the 3-column projection of the FACT
-    # table (6M rows at sf1.0 — a multi-second hashed-relation build, and the
-    # anti-scaling side at any larger input); the filtered cust⋈orders side
-    # is the dimension-bounded one (guide §3.1: choose the build side
-    # deliberately, estimates are often wrong after filters)
+    # choose the build side of the lineitem join: without a hint the
+    # planner's size estimate flips to broadcasting the 3-column projection
+    # of the FACT table (6M rows at sf1.0 — a multi-second hashed-relation
+    # build, and the anti-scaling side at any larger input). The filtered
+    # cust⋈orders side is the build side only while its MEASURED row count
+    # is under the broadcast limit; above it the join stays a shuffle join
+    # (guide §3.1: choose the build side deliberately, estimates are often
+    # wrong after filters)
+    cust_orders, _ = verify.gate_broadcast_info(
+        F.broadcast(cust).join(orders, cust.c_custkey == orders.o_custkey),
+        CFG.broadcast_pair_limit,
+    )
     return (
-        F.broadcast(cust)
-        .join(orders, cust.c_custkey == orders.o_custkey)
-        .hint("broadcast")
+        cust_orders
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(price * (one - disc)).cast("double").alias("revenue"))

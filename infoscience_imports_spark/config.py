@@ -41,7 +41,7 @@ class DedupConfig:
     broadcast_pair_limit: int = 2_000_000
 
     # --- skew control ---
-    bucket_cap: int = 64          # max docs per (band,bucket) before salting kicks in
+    bucket_cap: int = 64          # max docs per (band,bucket) paired all-vs-all; above it, star pairing
     salt_buckets: int = 16        # salt fan-out for hot buckets / hot labels
     # hot-bucket stats slice: collected to the driver and re-broadcast as a
     # literal when measured under this row count (saves recomputing + re-

@@ -3,18 +3,23 @@
 Web-scale analogue of the reference's fuzzy candidate search (title +
 year±1 Solr query per record, ``clients/dspace_client_wrapper.py:95-116``):
 instead of one remote lookup per row, signatures are banded (b=32 x r=4) and
-docs sharing any band bucket become candidate pairs — one shuffle keyed by
-(band, bucket) groups each bucket into a bounded array whose C(c,2)
-combinations are emitted map-side (no self-join; round 4).
+docs sharing any band bucket become candidate pairs.
 
-Skew story (north_rule: "salted keys to defuse hot-bucket skew"):
-  - buckets are counted first; buckets <= cap pair all-vs-all (pair
-    generation is quadratic only within a bucket);
-  - hot buckets (boilerplate pages land here) switch to bounded-degree *star
-    pairing* against the ``hub_count`` smallest doc_ids — this preserves
-    connectivity for the components stage (what dedup needs) without the
-    O(c^2) blowup;
-  - AQE skew-join splitting stays on for residual imbalance.
+"Ids that share a key become pairs" has ONE implementation here,
+:func:`_key_pairs`: one shuffle keyed by the group key collects each group
+into a sorted id set whose C(c,2) combinations are emitted map-side, then
+one ``distinct`` (no self-join — group on the non-unique key instead of
+expanding it through a join, as in the 3D hash join, CIDR 2022). Two entry
+points:
+  - :func:`candidate_pairs`, connectivity mode for clustering: buckets
+    <= ``bucket_cap`` pair all-vs-all; hot buckets (boilerplate pages land
+    here) switch to bounded-degree *star pairing* against their min/max
+    doc_id hubs — this preserves connectivity for the components stage
+    (what dedup needs) without the O(c^2) blowup;
+  - :func:`all_key_pairs`, exact mode: every group pairs all-vs-all, for
+    callers whose output must be every co-keyed pair (the sign-LSH embedding
+    candidates, the AllPairs prefix postings).
+AQE skew-join splitting stays on for residual imbalance.
 
 Also hosts the SimHash band path for short title-like fields: Manku-style
 block-combination tables (radius+3 blocks, keys over every 3-combination of
@@ -26,7 +31,7 @@ corpus^2/2^16 blowup of single 16-bit bands — and a JVM-side
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
@@ -58,18 +63,47 @@ def band_buckets(signatures: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> Da
     )
 
 
-def pair_combinations_expr(col: str = "members") -> Column:
-    """C(n,2) ordered pairs from a SORTED DISTINCT array column, emitted
-    map-side by higher-order functions (no join, no shuffle beyond the
-    aggregation that built the array). ``struct(id1, id2)`` rows with
-    id1 < id2 guaranteed by the sort + strict slice offset. Shared by
-    :func:`candidate_pairs` and the pipeline's bounded
-    ``duplicate_pairs()`` recall frame."""
-    return F.expr(
-        f"flatten(transform({col}, (x, i) -> "
-        f"transform(slice({col}, i + 2, size({col})), "
-        "y -> struct(x AS id1, y AS id2))))"
+def _key_pairs(
+    rows: DataFrame, keys: list[str], star_pairs: DataFrame | None = None
+) -> DataFrame:
+    """(keys..., doc_id) rows -> distinct (id1, id2), id1 < id2, for every
+    two ids that share a key — the one group-then-combine body.
+
+    Each group collects into ``sort_array(collect_set(doc_id))`` (one
+    exchange keyed by the group; spill-friendly ObjectHashAggregate) and the
+    combinations are emitted map-side: one row per member ``x`` carrying the
+    strictly later members as ``id2`` candidates, so a row holds at most
+    c-1 ids — never the C(c,2) array of a whole group. collect_set, not
+    collect_list: a duplicate (key, doc_id) input row would otherwise put a
+    doc next to itself in the sorted array and emit an id1 == id2 self-pair
+    (a bogus edge that verifies at jaccard 1.0). ``star_pairs`` (already
+    ordered id1 < id2) joins the same final ``distinct``.
+    """
+    pairs = (
+        rows.groupBy(*keys)
+        .agg(F.sort_array(F.collect_set("doc_id")).alias("members"))
+        .select(F.posexplode("members").alias("i", "id1"), "members")
+        .select(
+            "id1",
+            F.explode(
+                F.slice("members", F.col("i") + 2, F.size("members"))
+            ).alias("id2"),
+        )
     )
+    if star_pairs is not None:
+        pairs = pairs.union(star_pairs)
+    return pairs.distinct()
+
+
+def all_key_pairs(rows: DataFrame) -> DataFrame:
+    """Exact mode: (key columns..., doc_id) -> distinct (id1, id2) with
+    id1 < id2 for every two ids sharing a key, at any group size.
+
+    Every column other than ``doc_id`` is the key. Lazy: launches no job.
+    Output is O(sum c^2) by definition, so callers bound the group sizes
+    they feed (the sign-LSH density gate, the AllPairs prefix filter).
+    """
+    return _key_pairs(rows, [c for c in rows.columns if c != "doc_id"])
 
 
 def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -82,8 +116,8 @@ def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> Da
     table — no partitioning requirement, so no exchange). Non-hot buckets
     are provably <= ``bucket_cap`` docs after the anti-join, so intra-bucket
     pairing needs no join at all: each bucket collects into a BOUNDED array
-    and the C(c,2) combinations are emitted map-side by higher-order
-    functions (round 4 — this replaced a shuffle-hash SELF-JOIN: the join's
+    and the C(c,2) combinations are emitted map-side by :func:`_key_pairs`
+    (round 4 — this replaced a shuffle-hash SELF-JOIN: the join's
     per-partition hash relation over the full bucket table was both the
     memory hazard at web scale and wasted bytes locally; the array form is
     spill-friendly ObjectHashAggregate and measured shuffle write/read
@@ -141,33 +175,18 @@ def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> Da
         F.broadcast(hot.select("band", "bucket")), on=["band", "bucket"], how="left_anti"
     )
     # Non-hot buckets hold <= bucket_cap docs (the anti-join guarantees it),
-    # so intra-bucket pairing needs no join: collect each bucket into a
+    # so intra-bucket pairing needs no join: each bucket collects into a
     # BOUNDED array (<= cap elements — a mega-bucket can never reach this
-    # aggregate) and emit the C(c,2) combinations map-side with higher-order
-    # functions. The explicit repartition feeds the collect_list agg its
-    # required partitioning in ONE exchange; Catalyst pushes the broadcast
-    # anti-join below it, so the exchange carries only cold-bucket rows.
-    # collect_set, not collect_list: duplicate (band, bucket, doc_id) input
-    # rows would otherwise place a doc next to itself in the sorted array
-    # and the strict i < j combination emits an id1 == id2 self-pair — a
-    # bogus edge that verifies at jaccard 1.0. The replaced self-join's
-    # doc_id < doc_id filter suppressed these; the set keeps the rewrite's
-    # contract identical to the join under any input (and is still bounded:
-    # |set| <= |list| <= bucket_cap).
-    members = F.sort_array(F.collect_set("doc_id"))
-    pair_expr = pair_combinations_expr()
-    small_pairs = (
-        small.groupBy("band", "bucket")
-        .agg(members.alias("members"))
-        .select(F.explode(pair_expr).alias("p"))
-        .select("p.id1", "p.id2")
-    )
+    # aggregate) whose combinations are emitted map-side (_key_pairs). The
+    # explicit repartition feeds that aggregate its required partitioning in
+    # ONE exchange; Catalyst pushes the broadcast anti-join below it, so the
+    # exchange carries only cold-bucket rows.
     if not hot_rows:
-        return small_pairs.distinct()
+        return _key_pairs(small, ["band", "bucket"])
 
     # hot buckets: star pairing against the two hubs carried in the broadcast
     # stats slice — map-side join + inline hub explode, no second aggregation
-    big_pairs = (
+    star_pairs = (
         buckets.join(F.broadcast(hot), on=["band", "bucket"])
         .select(
             "doc_id",
@@ -179,8 +198,7 @@ def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> Da
             F.greatest("doc_id", "hub_id").alias("id2"),
         )
     )
-
-    return small_pairs.union(big_pairs).distinct()
+    return _key_pairs(small, ["band", "bucket"], star_pairs)
 
 
 def simhash_blocks(n_blocks: int) -> list[tuple[int, int]]:

@@ -18,6 +18,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .lsh import all_key_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -144,8 +146,6 @@ def similar_pairs(
     oracle's list_cosine (the matmul's FMA/blocked summation is only a
     prefilter and cannot drop a qualifying pair).
     """
-    from collections.abc import Iterator  # noqa: F401  (doc parity)
-
     import pandas as pd
     from pyspark.sql.types import (
         DoubleType,
@@ -248,13 +248,13 @@ def similar_pairs_lsh(
 
     Mirrors the text-side MinHash design (lsh.py): vectors are hashed to
     ``bands`` buckets of ``rows_per_band`` sign bits each; pairs sharing any
-    band bucket become candidates (equi-join keyed by (band, bucket) — the
-    only shuffle); candidates are re-ranked with the exact cosine and
-    filtered at ``threshold``. Recall follows the LSH S-curve
-    1-(1-p^r)^B with p = 1 - acos(sim)/pi — pick bands/rows for the target
-    threshold (e.g. 16x4 is ~1-3e-5 miss at sim 0.9). Use for thresholds
-    where p separates from 0.5; see :func:`similar_pairs` for the exact
-    blocked form.
+    band bucket become candidates (``lsh.all_key_pairs`` over (band,
+    bucket): one grouping shuffle, no self-join); candidates are re-ranked
+    with the exact cosine and filtered at ``threshold``. Recall follows the
+    LSH S-curve 1-(1-p^r)^B with p = 1 - acos(sim)/pi — pick bands/rows for
+    the target threshold (e.g. 16x4 is ~1-3e-5 miss at sim 0.9). Use for
+    thresholds where p separates from 0.5; see :func:`similar_pairs` for the
+    exact blocked form, which this falls back to when the bands are dense.
     """
     plane_mat = np.asarray(hyperplanes(dim, bands * rows_per_band, seed), dtype=np.float64)
     cos = _cosine_pandas_udf()
@@ -284,7 +284,7 @@ def similar_pairs_lsh(
     )
     # Measured density gate (round 6): with few sign bits per band the
     # buckets are DENSE — e.g. 2-bit bands have only 4 buckets, so every
-    # (band, bucket) holds ~n/4 vectors and the self-join emits ~B * n^2/8
+    # (band, bucket) holds ~n/4 vectors and the pairing emits ~B * n^2/8
     # candidate rows (measured: the 20k-vector corpus at 32x2 produced
     # ~1.6e9 candidates and spilled the disk to death before this gate).
     # When the banded candidate volume rivals brute force, banding buys
@@ -304,26 +304,10 @@ def similar_pairs_lsh(
         banded.unpersist()
         return similar_pairs(corpus, threshold, id_c=id_c, vec_c=vec_c)
 
-    # O(corpus) on both sides: pin a shuffle join (same rationale as the
-    # MinHash bucket self-join in lsh.py — a size-estimate flip to broadcast
-    # would build a corpus-sized hash relation). The join carries IDS ONLY:
-    # vectors are ~1 KB a row and every true pair collides in up to
-    # ``bands`` buckets, so dragging them through the join + distinct
-    # multiplied the shuffled bytes ~60x; they are re-attached per DISTINCT
-    # pair below (guide §2.3 "shuffle keys, not payloads").
-    a, b = banded.alias("a").hint("shuffle_hash"), banded.alias("b").hint("shuffle_hash")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col("a._id") < F.col("b._id"),
-            ],
-        )
-        .select(F.col("a._id").alias("id1"), F.col("b._id").alias("id2"))
-        .dropDuplicates(["id1", "id2"])
-    )
+    # Candidates carry IDS ONLY: vectors are ~1 KB a row and every true pair
+    # collides in up to ``bands`` buckets, so they are re-attached per
+    # DISTINCT pair below (guide §2.3 "shuffle keys, not payloads").
+    cand = all_key_pairs(banded.select("band", "bucket", F.col("_id").alias("doc_id")))
     vecs = corpus.select(F.col(id_c).alias("_id"), F.col(vec_c).alias("_v"))
     cand = cand.join(
         vecs.select(F.col("_id").alias("id1"), F.col("_v").alias("_v1")), on="id1"

@@ -1,8 +1,8 @@
 """Text-analysis operators for training-data pipelines.
 
-All hot paths are pure Column expressions (whole-stage codegen) — language
-ID, quality scoring and token counting never leave the JVM. The winnowing
-fingerprint uses explode + window over JVM xxhash64 (no Python).
+All hot paths but one are pure Column expressions (whole-stage codegen) —
+language ID, quality scoring and token counting never leave the JVM. The
+winnowing fingerprint is one per-document Arrow/NumPy kernel (no shuffle).
 
 These generalize the reference's scalar-function surface (SURVEY.md §2.8:
 clean_title/clean_value normalization kernels, fuzzy keyword predicates)
@@ -11,7 +11,7 @@ into the standard web-corpus curation set.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text_col
@@ -159,36 +159,23 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def portable_token_hash(tok: Column) -> Column:
-    """Engine-portable token hash: polynomial fold over ASCII codes, mod a
-    prime. Normalized tokens are [0-9a-z] only, so ``ascii``/``unicode``
-    agree across engines — this is what lets the winnowing output be
-    verified row-for-row by an independent SQL engine (the xxhash64 default
-    has no cross-engine twin)."""
-    codes = F.transform(F.split(tok, ""), lambda c: F.ascii(c).cast("long"))
-    return F.aggregate(
-        codes,
-        F.lit(7).cast("long"),
-        lambda acc, c: (acc * F.lit(31) + c) % F.lit(1_000_003),
-    )
-
-
 def winnowing_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
     window: int = 4,
-    portable_hash: bool = True,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 — public).
 
     k-gram rolling hashes, then the min hash of every sliding window of
     ``window`` consecutive k-grams is selected; distinct selected hashes are
-    the doc's fingerprints.
+    the doc's fingerprints. Token hashes are the engine-portable polynomial
+    fold over ASCII codes mod a prime (normalized tokens are [0-9a-z] only),
+    which is what lets an independent SQL engine verify the output
+    row-for-row.
 
-    ``portable_hash=True`` (default, the oracle-checked polynomial hash)
-    runs as ONE Arrow ``mapInPandas`` kernel with per-row NumPy sliding
+    Runs as ONE Arrow ``mapInPandas`` kernel with per-row NumPy sliding
     windows: fingerprints are a strictly per-document quantity, so the
     previous posexplode of every token through a shuffle + two sorted
     rolling windows + an array aggregation (O(total tokens) exchanged, the
@@ -196,22 +183,22 @@ def winnowing_fingerprints(
     — guide §2.4 "remove shuffles outright". Measured at sf1.0: 5.9 s /
     23 MB shuffle -> sub-second / zero shuffle, byte-identical output
     (pinned by tests/test_parity_ops.py equivalence test and the DuckDB
-    oracle hash). ``id_col`` is emitted as long in this path.
+    oracle hash).
 
-    ``portable_hash=False`` (xxhash64 values — no Python twin exists, so
-    the kernel cannot reproduce them) keeps the JVM window plan.
+    ``id_col`` keeps its integral type (byte/short/int/long) in the output
+    ``doc_id``; any other id type raises ``ValueError`` here, before a job
+    runs, instead of failing inside a Python worker.
     """
-    if not portable_hash:
-        return _winnowing_fingerprints_windowed(df, id_col, text_col, k, window, False)
-
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
+        ByteType,
         IntegerType,
         LongType,
+        ShortType,
         StructField,
         StructType,
     )
@@ -219,9 +206,19 @@ def winnowing_fingerprints(
     from ..functions.text import normalize_text_py
 
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+    id_type = src.schema["doc_id"].dataType
+    id_dtype = {
+        ByteType(): "int8", ShortType(): "int16", IntegerType(): "int32", LongType(): "int64"
+    }.get(id_type)
+    if id_dtype is None:
+        raise ValueError(
+            f"winnowing_fingerprints: id column {id_col!r} has type "
+            f"{id_type.simpleString()}; an integral type (tinyint, smallint, "
+            "int, bigint) is required"
+        )
     schema = StructType(
         [
-            StructField("doc_id", LongType(), False),
+            StructField("doc_id", id_type, False),
             StructField("fingerprints", ArrayType(LongType(), False), True),
             StructField("n_fingerprints", IntegerType(), False),
         ]
@@ -233,8 +230,8 @@ def winnowing_fingerprints(
         memo: dict[str, int] = {}
 
         def tok_hash(t: str) -> int:
-            # polynomial fold — the exact twin of portable_token_hash /
-            # the DuckDB list_reduce oracle (hash-pinned in CORRECTNESS)
+            # polynomial fold — the exact twin of the DuckDB list_reduce
+            # oracle (hash-pinned in CORRECTNESS)
             h = memo.get(t)
             if h is None:
                 h = 7
@@ -260,7 +257,7 @@ def winnowing_fingerprints(
                 else:
                     fp = g
                 u = np.unique(fp)
-                ids.append(int(doc_id))
+                ids.append(doc_id)
                 fps.append(u)
                 nf.append(u.size)
             # explicit dtypes: an all-short-docs partition yields zero rows,
@@ -268,45 +265,13 @@ def winnowing_fingerprints(
             # which Arrow cannot convert to list<int64>
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype=id_dtype),
                     "fingerprints": pd.Series(fps, dtype="object"),
                     "n_fingerprints": pd.Series(nf, dtype="int32"),
                 }
             )
 
     return src.mapInPandas(kernel, schema=schema)
-
-
-def _winnowing_fingerprints_windowed(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-    portable_hash: bool = True,
-) -> DataFrame:
-    """JVM window-function form of :func:`winnowing_fingerprints` — kept for
-    the xxhash64 variant (no Python hash twin) and as the equivalence
-    oracle for the Arrow kernel in tests."""
-    toks = df.select(F.col(id_col).alias("doc_id"), F.posexplode(tokens_col(F.col(text_col))).alias("pos", "tok"))
-    h_col = portable_token_hash(F.col("tok")) if portable_hash else F.xxhash64("tok")
-    hashed = toks.withColumn("h", h_col)
-    w_gram = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(0, k - 1)
-    )
-    grams = (
-        hashed.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-        .withColumn("gram_h", F.pmod(F.sum(F.pmod(F.col("h"), F.lit(1 << 31))).over(w_gram), F.lit(1 << 31)))
-        .filter(F.col("pos") <= F.col("n") - k)
-    )
-    w_win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
-    selected = grams.withColumn("fp", F.min("gram_h").over(w_win))
-    return selected.groupBy("doc_id").agg(
-        F.array_sort(F.array_distinct(F.collect_list("fp"))).alias("fingerprints"),
-        F.size(F.array_distinct(F.collect_list("fp"))).alias("n_fingerprints"),
-    )
 
 
 def top_ngrams(docs: DataFrame, n: int = 5, k: int = 100, text_col: str = "text") -> DataFrame:

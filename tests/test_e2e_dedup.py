@@ -318,11 +318,12 @@ def test_candidate_pairs_matches_bruteforce_on_every_hot_slice_path(spark, hot):
     """All three probe branches give the brute-force pair set: no hot
     bucket (direct pairing), a hot slice under ``hot_collect_limit`` (a
     JVM-side literal, no Python-built RDD) and one above it (the plan
-    subtree, forced with ``hot_collect_limit=0``)."""
+    subtree, forced with ``hot_collect_limit=0``). The exact mode pairs
+    every bucket all-vs-all at any size, with no star and no join."""
     import random
     from collections import Counter
 
-    from infoscience_imports_spark.operators.lsh import candidate_pairs
+    from infoscience_imports_spark.operators.lsh import all_key_pairs, candidate_pairs
 
     cap = 4
     rnd = random.Random(7)
@@ -353,34 +354,13 @@ def test_candidate_pairs_matches_bruteforce_on_every_hot_slice_path(spark, hot):
             assert "Join" not in plan, plan
         else:
             assert ("LocalRelation" in plan) == bool(limit), plan
+
+    exact = all_key_pairs(buckets)
+    got = [(r["id1"], r["id2"]) for r in exact.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _bucket_pairs_reference(rows, cap=len(rows))
+    assert "Join" not in exact._jdf.queryExecution().optimizedPlan().toString()
     shutil.rmtree(path)
-
-
-def test_duplicate_pairs_bounded_and_correct(spark):
-    """Round-5 verdict #3: duplicate_pairs() must stay linear-space on the
-    shuffle (bounded per-cluster arrays, no cluster-table self-join) and
-    refuse a mega-cluster whose pair frame would be ~c^2/2 rows, pointing
-    at the linear-space scorer."""
-    from infoscience_imports_spark.plans.pipeline import DedupPipeline
-
-    pipe = DedupPipeline(
-        spark, CheckpointStore(spark, tempfile.mkdtemp()), DedupConfig(shuffle_partitions=8)
-    )
-    small = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5)], "doc_id long, cluster_id long"
-    )
-    pipe.clusters = lambda: small
-    got = {(r["id1"], r["id2"]) for r in pipe.duplicate_pairs().collect()}
-    assert got == {(1, 2), (1, 3), (2, 3), (5, 6)}
-
-    mega = spark.range(0, 3000).select(
-        F.col("id").alias("doc_id"), F.lit(0).alias("cluster_id")
-    )
-    pipe.clusters = lambda: mega
-    with pytest.raises(ValueError, match="grouped_pair_recall"):
-        pipe.duplicate_pairs(max_cluster_size=1000)
-    # an explicit higher cap still materializes the full combination set
-    assert pipe.duplicate_pairs(max_cluster_size=3000).count() == 3000 * 2999 // 2
 
 
 def test_pipeline_and_deep_compactor_build_the_same_edges(spark):

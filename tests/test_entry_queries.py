@@ -18,12 +18,17 @@ SUBSET = [
     "decontaminate_docs",
     "dedup_minhash_lsh",
     "dedup_clusters",
+    "dedup_ngram_jaccard",
+    "embedding_neardup_lsh",
+    "dedup_simhash_title",
+    "text_fingerprints",
     "containment_substring",
     "text_lang_id",
     "text_quality",
     "text_topgrams",
     "ann_cosine_topk",
     "q1_pricing_summary",
+    "q3_shipping_priority",
     "events_sessionize",
     "orders_running_window",
     "nation_rollup",

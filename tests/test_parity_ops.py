@@ -2,7 +2,8 @@
 
 from datetime import datetime
 
-from pyspark.sql import Row
+import pytest
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from infoscience_imports_spark.functions.scalars import (
@@ -194,15 +195,56 @@ def test_top_ngrams_df_semantics_and_boundary_tiebreak(spark):
     assert rows == [("a a", 1), ("b b", 1)], rows
 
 
+def portable_token_hash(tok: Column) -> Column:
+    """Engine-portable token hash: polynomial fold over ASCII codes, mod a
+    prime. Normalized tokens are [0-9a-z] only, so ``ascii``/``unicode``
+    agree across engines — the JVM twin of the winnowing kernel's token
+    hash."""
+    codes = F.transform(F.split(tok, ""), lambda c: F.ascii(c).cast("long"))
+    return F.aggregate(
+        codes,
+        F.lit(7).cast("long"),
+        lambda acc, c: (acc * F.lit(31) + c) % F.lit(1_000_003),
+    )
+
+
+def _winnowing_fingerprints_windowed(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 5,
+    window: int = 4,
+) -> DataFrame:
+    """JVM window-function form of ``winnowing_fingerprints`` — the
+    equivalence oracle for the Arrow kernel."""
+    from infoscience_imports_spark.operators.textops import tokens_col
+
+    toks = df.select(F.col(id_col).alias("doc_id"), F.posexplode(tokens_col(F.col(text_col))).alias("pos", "tok"))
+    hashed = toks.withColumn("h", portable_token_hash(F.col("tok")))
+    w_gram = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(0, k - 1)
+    )
+    grams = (
+        hashed.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+        .withColumn("gram_h", F.pmod(F.sum(F.pmod(F.col("h"), F.lit(1 << 31))).over(w_gram), F.lit(1 << 31)))
+        .filter(F.col("pos") <= F.col("n") - k)
+    )
+    w_win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
+    selected = grams.withColumn("fp", F.min("gram_h").over(w_win))
+    return selected.groupBy("doc_id").agg(
+        F.array_sort(F.array_distinct(F.collect_list("fp"))).alias("fingerprints"),
+        F.size(F.array_distinct(F.collect_list("fp"))).alias("n_fingerprints"),
+    )
+
+
 def test_winnowing_kernel_equals_windowed_form(spark):
     """The Arrow winnowing kernel (round-6: per-row NumPy sliding windows,
     zero shuffle) must be row-identical to the JVM window-function form it
     replaced — including <k-token docs (absent), exactly-k docs (one gram),
     repeated tokens, empty and NULL text."""
-    from infoscience_imports_spark.operators.textops import (
-        _winnowing_fingerprints_windowed,
-        winnowing_fingerprints,
-    )
+    from infoscience_imports_spark.operators.textops import winnowing_fingerprints
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -224,3 +266,21 @@ def test_winnowing_kernel_equals_windowed_form(spark):
         for r in _winnowing_fingerprints_windowed(docs).collect()
     }
     assert got == want
+
+
+def test_winnowing_kernel_keeps_the_id_type(spark):
+    """The kernel carries an integral id column's type through unchanged
+    and rejects any other id type when the plan is built, naming it."""
+    from pyspark.sql.types import IntegerType
+
+    from infoscience_imports_spark.operators.textops import winnowing_fingerprints
+
+    text = "alpha beta gamma delta epsilon zeta"
+    ints = spark.createDataFrame([(7, text)], "doc_id int, text string")
+    out = winnowing_fingerprints(ints)
+    assert out.schema["doc_id"].dataType == IntegerType()
+    assert [r["doc_id"] for r in out.collect()] == [7]
+
+    strs = spark.createDataFrame([("7", text)], "doc_id string, text string")
+    with pytest.raises(ValueError, match="string"):
+        winnowing_fingerprints(strs)

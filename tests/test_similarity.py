@@ -411,3 +411,46 @@ def test_lsh_density_fallback_releases_band_cache(spark, planted, monkeypatch):
     assert got == _true_pairs(sims, 0.9)  # the exact blocked answer
     assert len(persisted) == 1
     assert persisted[0].storageLevel == StorageLevel.NONE
+
+
+def _self_joins(df, marker):
+    """Joins in ``df``'s optimized plan whose two inputs both read the frame
+    that ``marker`` (a column or expression name) identifies."""
+    found, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Join":
+            left, right = node.left().toString(), node.right().toString()
+            if marker in left and marker in right:
+                found.append(node.toString())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_pair_candidates_join_no_keyed_frame_with_itself(spark, planted, tmp_path):
+    """The sign-LSH sparse branch and the AllPairs prefix postings pair
+    their keys by grouping (lsh.all_key_pairs): neither candidate plan
+    joins the keyed frame with itself."""
+    import __spark_entry__ as E
+
+    df, sims = planted
+    # 8-bit bands: sparse enough to pass the density gate on 180 vectors
+    # (16x4 is dense here and takes the blocked fallback)
+    lsh_pairs = similar_pairs_lsh(df, threshold=0.9, dim=DIM, bands=16, rows_per_band=8)
+    plan = lsh_pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "bucket" in plan, "the sparse banded branch must be taken"
+    assert _self_joins(lsh_pairs, "bucket") == []
+    got = {(r["id1"], r["id2"]) for r in lsh_pairs.collect()}
+    truth = _true_pairs(sims, 0.9)
+    assert got <= truth and len(got) >= 0.97 * len(truth), (len(got), len(truth))
+
+    toks = [f"w{i:02d}" for i in range(12)]
+    spark.createDataFrame(
+        [(1, " ".join(toks)), (2, " ".join(toks + ["x1", "x2"])), (3, " ".join(toks[2:]))],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    jac = E._bruteforce_jaccard_pairs(spark, str(tmp_path), threshold=0.7)
+    assert _self_joins(jac, "_rn") == []
+    assert {(r["id1"], r["id2"]) for r in jac.collect()} == {(1, 2), (1, 3)}
+    E.release_caches()
